@@ -360,7 +360,7 @@ object ScaleSmoke {
           silent: Boolean = false): Unit = {
         val docs = replicate(times, perturb = false)
         val t0 = System.nanoTime()
-        val (merges, _) = graft.ops.Bpe.train(docs)
+        val merges = graft.ops.Bpe.train(docs).merges
         val tTrain = (System.nanoTime() - t0) / 1e9
         graft.ops.TextKit.releaseCaches()
         val t1 = System.nanoTime()
@@ -812,10 +812,9 @@ object ScaleSmoke {
 
     // Batched BPE training (q124-q129's trainer) at a production-ish
     // merge count. Two claims the row records: (a) nMerges=64 RUNS at
-    // all — the per-merge persist chain OOM'd the driver before the
-    // per-pass localCheckpoint (plan/explain strings grew quadratically
-    // with merges); (b) passes < merges under the exact batched
-    // selector. Passes do NOT approach merges/k on natural text, and
+    // all, in one Spark job per pass over the persisted word-table RDD
+    // (no DataFrame plan grows with the merges); (b) passes < merges
+    // under the exact batched selector. Passes do NOT approach merges/k on natural text, and
     // measurably cannot: sequential BPE's next merge frequently
     // consumes the previous merge's output symbol ((t,h) then (th,e)),
     // an order no exact batcher may pre-commit — the triple bound
@@ -833,13 +832,13 @@ object ScaleSmoke {
       spark.catalog.clearCache(); base.cache(); base.count()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      val (merges, _) = graft.ops.Bpe.train(base, nMerges = nMerges)
+      val trained = graft.ops.Bpe.train(base, nMerges = nMerges)
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(1000) // listener bus drains async
       spark.sparkContext.removeSparkListener(listener)
       spark.catalog.clearCache(); base.cache(); base.count()
       println(f"""{"experiment":"bpe_train","rows":$n,""" +
-        f""""n_merges":${merges.size},"passes":${graft.ops.Bpe.lastTrainPasses},""" +
+        f""""n_merges":${trained.merges.size},"passes":${trained.passes},""" +
         f""""jobs":${jobs.get},"train_sec":$sec%.2f}""")
     }
 

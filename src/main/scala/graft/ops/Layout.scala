@@ -63,10 +63,12 @@ object Layout {
   }
 
   /** [[zValueN]] as a raw Catalyst tree — the SQL-function-registry twin
-    * (`z_value_n` in [[graft.plans.GraftExtensions]]); see
-    * [[graft.ops.Bpe.tokenCountCatalyst]] for why the Column form cannot
-    * cross the registry boundary. Inputs are cast to BIGINT up front, so
-    * INT columns interleave identically to the Column form. */
+    * (`z_value_n` in [[graft.plans.GraftExtensions]]). A Column tree
+    * cannot cross the registry boundary: Spark 4 wraps it in a
+    * ColumnNodeExpression leaf the analyzer treats as opaque, so the
+    * registered builder composes the same shape from Catalyst nodes.
+    * Inputs are cast to BIGINT up front, so INT columns interleave
+    * identically to the Column form. */
   def zValueNCatalyst(cols: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       bits: Int): org.apache.spark.sql.catalyst.expressions.Expression = {
     import org.apache.spark.sql.catalyst.expressions._

@@ -424,10 +424,17 @@ object Similarity {
   /** Collect a (cent_id, cqv, ...) centroid frame back to driver arrays,
     * ordered by cent_id — k x dim longs, the same bounded state
     * [[kmeansCentroids]] already holds. Used where only the stored
-    * DataFrame form exists (a persisted index read back from parquet). */
-  private def centArr(cent: DataFrame): Seq[Array[Long]] =
-    cent.orderBy(col("cent_id")).select(col("cqv")).collect()
-      .map(_.getSeq[Long](0).toArray).toSeq
+    * DataFrame form exists (a persisted index read back from parquet).
+    * Callers index the result by position (`residualExpr` looks cell c
+    * up at index c), so the ids must be exactly 0 until k. */
+  private def centArr(cent: DataFrame): Seq[Array[Long]] = {
+    val rows = cent.orderBy(col("cent_id")).select(col("cent_id"), col("cqv"))
+      .collect()
+    require(rows.indices.forall(i => rows(i).getLong(0) == i),
+      s"centroid ids must be exactly 0 until ${rows.length}, got " +
+        rows.map(_.getLong(0)).mkString(","))
+    rows.map(_.getSeq[Long](1).toArray).toSeq
+  }
 
   /** The k (squared-L2 distance, cent_id) structs of a vector against a
     * LITERAL centroid set — row-local codegen arithmetic, no join, no
@@ -846,6 +853,9 @@ object Similarity {
       else vecs.filter(
         pmod(md5Long(col("vec_id").cast(org.apache.spark.sql.types.StringType)),
           lit(sampleMod.toLong)) === 0)
+    // empty codebook (empty training corpus): nothing to refine — the
+    // cb.isEmpty contract of encodeCodes/adcTables
+    if (init.isEmpty) return init
     var cb = init
     for (_ <- 0 until iters) {
       // Row-local argmin via the NATIVE PqEncodeCodes kernel (r16). The
@@ -886,11 +896,25 @@ object Similarity {
 
   /** Collect a stored (sub, code, cbv) codebook frame back to the
     * driver, ordered — m x codesPerSub x subDim longs, the same bounded
-    * state the builders already hold as `cbSeq`. */
-  private def codebookArr(codebook: DataFrame): Seq[(Int, Long, Seq[Long])] =
-    codebook.select(col("sub"), col("code"), col("cbv"))
+    * state the builders already hold as `cbSeq`. The search side slots
+    * entries by (sub, code), so the codebook must be the dense grid the
+    * builders write: every subspace 0 until m carrying the same codes
+    * 0 until c (c < codesPerSub only for an under-filled sample of a
+    * tiny corpus), each a subDim-long vector — or empty. */
+  private def codebookArr(codebook: DataFrame, m: Int, codesPerSub: Int,
+      subDim: Int): Seq[(Int, Long, Seq[Long])] = {
+    val cb = codebook.select(col("sub"), col("code"), col("cbv"))
       .orderBy(col("sub"), col("code")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2)))
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2))).toSeq
+    val c = cb.size / m
+    require(cb.isEmpty || (c >= 1 && c <= codesPerSub && cb.size == m * c &&
+        cb.zipWithIndex.forall { case ((s, code, v), i) =>
+          s == i / c && code == i % c && v.size == subDim }),
+      s"codebook must be dense: $m subspaces x the same codes 0 until c " +
+        s"(c <= $codesPerSub) x $subDim dims, got ${cb.size} entries " +
+        cb.map(e => (e._1, e._2)).mkString(","))
+    cb
+  }
 
   /** PQ encode: argmin codebook entry per (keep-key, subspace), packed
     * to one `codes` array per keep-key — ROW-LOCAL over the literal
@@ -970,7 +994,7 @@ object Similarity {
       centsCache
     }
     private[graft] def cbArr: Seq[(Int, Long, Seq[Long])] = {
-      if (cbCache == null) cbCache = codebookArr(codebook)
+      if (cbCache == null) cbCache = codebookArr(codebook, m, codesPerSub, subDim)
       cbCache
     }
     /** copy() that carries the memoized training-state arrays along. */

@@ -93,20 +93,25 @@ object TextKit {
 
   /** Run independent Spark actions from sibling threads and wait for
     * all (guide §2.6 — the scheduler happily overlaps jobs; actions are
-    * only sequential because driver code calls them sequentially). Any
-    * failure rethrows after every thread finished. */
+    * only sequential because driver code calls them sequentially). After
+    * every thread finished, the first failure rethrows with every other
+    * failure attached as suppressed. */
   private[graft] def inParallel(fs: (() => Unit)*): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     // the caller's cache scope rides into the sibling threads, so
     // relations tracked there still release when the scope closes
     val parentScope = scopeRelations.get()
-    val ts = fs.map(f => new Thread(() => {
+    val ts = fs.zipWithIndex.map { case (f, i) => new Thread(() => {
       scopeRelations.set(parentScope)
       try f() catch { case t: Throwable => errs.add(t); () }
-    }))
+    }, s"graft-inParallel-$i") }
     ts.foreach(_.start())
     ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(t => first.addSuppressed(t))
+      throw first
+    }
   }
 
   /** Spread an under-partitioned input across the cluster's task slots —

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{LongArrayDot, Md5Long60, WordShingles}
+import graft.functions.{BpeMerge, BpeTokenCount, LongArrayDot, Md5Long60, WordShingles}
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions as SQL functions so `spark.sql` users (and the view layer)
@@ -56,24 +56,24 @@ object GraftExtensions {
     }
 
   /** `bpe_token_count(text, merges)` — whole-document token count
-    * through a LITERALIZED trained merge chain ([[graft.ops.Bpe
-    * .tokenCountExpr]]): the merges argument is the model, spelled
-    * `"lhs rhs,lhs rhs,..."` in training order ('' = untrained
-    * char-level count). The same literalize-the-model door the
-    * streaming twins use — the expression stays pure string arithmetic
-    * under codegen, no UDF, no state. */
+    * under a trained merge table: the merges argument is the model,
+    * spelled `"lhs rhs,lhs rhs,..."` in training order ('' = untrained
+    * char-level count). It builds the same native
+    * [[graft.functions.BpeTokenCount]] node as the Column form
+    * ([[graft.ops.Bpe.tokenCountExpr]]) — one codegen'd kernel call per
+    * row, no UDF, no state. */
   private[plans] def bpeTokenCount(children: Seq[Expression]): Expression = {
     checkArity("bpe_token_count", "text, 'lhs rhs,lhs rhs,...'", children, 2)
     val spec = literalString("bpe_token_count", children, 1).trim
     val merges = if (spec.isEmpty) Nil
       else spec.split(",").toSeq.zipWithIndex.map { case (m, i) =>
         m.trim.split(" ") match {
-          case Array(l, r) => graft.ops.Bpe.Merge(i, l, r, 0L)
+          case Array(l, r) => (l, r)
           case _ => throw new IllegalArgumentException(
             s"bpe_token_count merge ${i + 1}: expected 'lhs rhs', got '$m'")
         }
       }
-    graft.ops.Bpe.tokenCountCatalyst(children.head, merges)
+    BpeTokenCount(children.head, BpeMerge.model(merges))
   }
 
   /** `z_value_n(c1, ..., ck, bits)` — N-dimensional Z-order interleave
@@ -156,7 +156,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("bpe_token_count"),
       info("bpe_token_count",
         "bpe_token_count(text, 'lhs rhs,lhs rhs,...') - BPE token count " +
-          "of text under a literalized trained merge chain ('' = char-level)"),
+          "of text under a trained merge table ('' = char-level)"),
       GraftExtensions.bpeTokenCount))
     ext.injectFunction((
       FunctionIdentifier("z_value_n"),

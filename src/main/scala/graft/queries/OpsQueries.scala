@@ -551,11 +551,11 @@ object OpsQueries {
         .orderBy("doc_id", "variant")
     }),
     // the q86 rate-form training mix re-based on REAL tokenizer counts:
-    // the trained BPE merge table literalizes into tokenRateMix's
+    // the trained BPE merge table freezes into tokenRateMix's
     // per-row token column — budgets now meter actual model tokens
     "q128_bpe_token_mix" -> ((s, d) => {
       val dd = docs(s, d)
-      val (merges, _) = Bpe.train(dd)
+      val merges = Bpe.train(dd).merges
       TextKit.releaseCaches()
       TextAnalysis.tokenRateMix(dd, Map("src0" -> 700L, "src1" -> 0L),
           defaultBudget = 500L,
@@ -3644,7 +3644,7 @@ object OpsQueries {
     def rep1(e: String): String =
       s"replace($e, chr(31) || p.lhs || chr(31) || p.rhs || chr(31), " +
         s"chr(31) || p.lhs || p.rhs || chr(31))"
-    val repN = (1 to Bpe.Sweeps)
+    val repN = (1 to graft.functions.BpeMerge.Sweeps)
       .foldLeft("w.sym")((a, _) => rep1(a))
     val stages = (1 to nMerges).map { t =>
       val prev = s"bws${t - 1}"
@@ -3697,7 +3697,7 @@ object OpsQueries {
        GROUP BY d.doc_id ORDER BY doc_id"""
 
   /** Apply the learned rules bp1..bpN to the FULL-corpus distinct-word
-    * dictionary (bdict0) — mirror of Bpe.encodeExpr over Bpe's dict. */
+    * dictionary (bdict0) — mirror of Bpe.tokenCounts' dictionary encode. */
   private def encodeStages(nMerges: Int): String = {
     def rep1(e: String): String =
       s"replace($e, chr(31) || p.lhs || chr(31) || p.rhs || chr(31), " +
@@ -3709,7 +3709,7 @@ object OpsQueries {
              chr(31) || regexp_replace(word, '(.)', '\1' || chr(31), 'g')
                AS sym FROM bdict0)"""
         else s"bdict${t - 1}"
-      val repN = (1 to Bpe.Sweeps).foldLeft("w.sym")((a, _) => rep1(a))
+      val repN = (1 to graft.functions.BpeMerge.Sweeps).foldLeft("w.sym")((a, _) => rep1(a))
       s"""bdict$t AS (SELECT w.word,
            CASE WHEN p.lhs IS NULL THEN w.sym ELSE $repN END AS sym
          FROM $prev w LEFT JOIN bp$t p ON TRUE)"""

@@ -467,9 +467,9 @@ object StreamingOps {
 
   /** Streaming BPE token counting: the tokenizer trains ONCE on the
     * static corpus (batch side — [[graft.ops.Bpe.train]]), its merge
-    * table LITERALIZES into a row-local expression chain
-    * ([[graft.ops.Bpe.tokenCountExpr]] — nested replaces, no join, no
-    * state), and the stream of documents is counted at ingest time in
+    * table freezes into a row-local kernel expression
+    * ([[graft.ops.Bpe.tokenCountExpr]] — one native call per row, no
+    * join, no state), and the stream of documents is counted at ingest time in
     * pure Append mode: no aggregation anywhere, so the plan is
     * stream-legal by construction. The q106 pattern (literal index
     * state makes a batch-trained model streamable) applied to the
@@ -484,7 +484,7 @@ object StreamingOps {
     val corpus = ss.read.schema(docsSchema)
       .parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val (merges, _) = graft.ops.Bpe.train(corpus)
+    val merges = graft.ops.Bpe.train(corpus).merges
     graft.ops.TextKit.releaseCaches()
     val words = filter(split(col("text"), " "), w => w =!= lit(""))
     ss.readStream.schema(docsSchema)

@@ -21,6 +21,12 @@ object GraftBridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** Block until every event posted so far has reached the listeners
+    * (the listener bus is private[spark]): a SparkListener's counts are
+    * complete only after this. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Storage location URI of a catalog table (sessionState is
     * private[sql]). */
   def tableLocation(spark: org.apache.spark.sql.SparkSession,

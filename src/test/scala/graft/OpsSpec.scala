@@ -1356,7 +1356,7 @@ class OpsSpec extends SparkSpec {
     // from the three "abab"s (3) beats (b,a) (3)? tie -> lexicographic:
     // ("ab","ab") < ("b","a") so ("ab","ab") merges second
     val d = Seq((0L, "abab abab abab ab ab")).toDF("doc_id", "text")
-    val (merges, _) = Bpe.train(d, nMerges = 2)
+    val merges = Bpe.train(d, nMerges = 2).merges
     assert(merges.map(m => (m.lhs, m.rhs, m.pairN)) ==
       Seq(("a", "b", 8L), ("ab", "ab", 3L)))
     val counts = Bpe.tokenCounts(d, nMerges = 2).collect().head
@@ -1370,20 +1370,21 @@ class OpsSpec extends SparkSpec {
     // leaving [bb b bb b bb b bb b bb bb] = 10 symbols with NO (b,b)
     // occurrence left — the defined deterministic semantics
     val run = Seq((0L, ("b" * 16) + " bb bb bb")).toDF("doc_id", "text")
-    val (m2, _) = Bpe.train(run, nMerges = 1)
+    val m2 = Bpe.train(run, nMerges = 1).merges
     assert(m2.map(m => (m.lhs, m.rhs, m.pairN)) == Seq(("b", "b", 18L)))
     val c2 = Bpe.tokenCounts(run, nMerges = 1).collect().head
     // b^16 -> 10 symbols; each "bb" word -> 1 token => 10 + 3 = 13
     assert(c2.getAs[Long]("n_words") == 4L)
     assert(c2.getAs[Long]("bpe_tokens") == 13L)
     assert(c2.getAs[Long]("n_chars") == 22L)
-    // the literalized encoder handles words never seen in training
-    val oov = Seq(("xbabx")).toDF("word")
-      .select(Bpe.encodeExpr(col("word"), merges).as("sym"))
-      .collect().head.getString(0)
+    // the merge kernel handles words never seen in training
+    val oov = graft.functions.BpeMerge.encode("xbabx", Bpe.model(merges))
     // merges (a,b) then (ab,ab): xbabx -> x b ab x
-    assert(oov.split("\u001f").filter(_.nonEmpty).toSeq ==
+    assert(graft.functions.BpeMerge.symbols(oov).map(_.toString).toSeq ==
       Seq("x", "b", "ab", "x"))
+    assert(Seq("xbabx").toDF("word")
+      .select(Bpe.tokenCountExpr(col("word"), merges)).collect().head
+      .getLong(0) == 4L)
     // doc-level hash sampling trains on a strict subset but still encodes
     // every document
     val many = (0L to 19L).map(i => (i, "abab ab")).toDF("doc_id", "text")
@@ -1703,5 +1704,19 @@ class OpsSpec extends SparkSpec {
     assert(kn.values.toSeq.count(_ > 0L) >= plain.values.toSeq.count(_ > 0L),
       "KN must not zero out docs the unsmoothed model scores")
     TextKit.releaseCaches()
+  }
+
+  test("inParallel: every sibling failure reaches the caller, threads named") {
+    val names = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val e = intercept[IllegalStateException] {
+      TextKit.inParallel(
+        () => { names.add(Thread.currentThread.getName); () },
+        () => throw new IllegalStateException("a"),
+        () => throw new IllegalStateException("b"))
+    }
+    assert((e.getMessage +: e.getSuppressed.map(_.getMessage).toSeq).sorted ==
+      Seq("a", "b"))
+    assert(names.get(0) == "graft-inParallel-0")
   }
 }

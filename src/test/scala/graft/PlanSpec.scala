@@ -340,6 +340,19 @@ class PlanSpec extends SparkSpec {
     assert(!p125.contains("Window"),
       s"BPE encode must not plan a window:\n$p125")
     assert(!p125.contains("CartesianProduct"))
+    // q128: the trained merge table is ONE native kernel node per use
+    // of the token column (the per-row and per-source-total branches),
+    // not an nMerges x Sweeps tree of StringReplace nodes per word
+    val q128 = SparkEntry.queries("q128_bpe_token_mix")(spark, sf)
+      .queryExecution.optimizedPlan
+    val kernelsPerNode = q128.collect { case n =>
+      n.expressions.map(_.collect {
+        case k: graft.functions.BpeTokenCount => k }.size).sum }
+    assert(kernelsPerNode.sum > 0 && kernelsPerNode.forall(_ <= 1),
+      s"q128 must call the BPE kernel once per projection:\n$q128")
+    assert(!q128.exists(_.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.StringReplace]))),
+      s"q128 must not plan StringReplace chains:\n$q128")
     // q127: the 4096-row model must BROADCAST against the exploded
     // feature stream (shuffling the corpus features on bucket id would
     // funnel zipfian buckets), and scoring is keyed aggregation only
